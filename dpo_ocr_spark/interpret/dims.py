@@ -13,6 +13,7 @@ sortorder — block_identification.py:270-282).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _GENERA = ["Apis", "Bombus", "Vespa", "Formica", "Lasius",
@@ -34,7 +35,9 @@ def _gadm(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row per (nation, county): 25 × 10 = 250, every name unique."""
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    county = spark.createDataFrame([(c,) for c in _COUNTIES], ["county"])
+    # an Arrow table becomes a local relation: no job, no Python worker
+    # (a list of tuples is parallelized through a Python-worker job)
+    county = spark.createDataFrame(pa.table({"county": _COUNTIES}))
     return (
         nation.join(region, nation.n_regionkey == region.r_regionkey)
         .crossJoin(F.broadcast(county))
@@ -80,13 +83,13 @@ def gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # match order of the reference's localities_match frame: counties,
     # states, sub-states, countries (block_identification.py:247-248),
-    # each level internally sorted (determinism pin, see docstring)
-    return (
-        counties.orderBy("name", "uid")
-        .unionByName(states.orderBy("name", "uid"))
-        .unionByName(sub_states.orderBy("name", "uid"))
-        .unionByName(countries.orderBy("name", "uid"))
-    )
+    # each level internally sorted (determinism pin, see docstring) — one
+    # sort on (level, name, uid) instead of a sort per level
+    levels = [counties, states, sub_states, countries]
+    tagged = levels[0].withColumn("_level", F.lit(0))
+    for i, level in enumerate(levels[1:], 1):
+        tagged = tagged.unionByName(level.withColumn("_level", F.lit(i)))
+    return tagged.orderBy("_level", "name", "uid").drop("_level")
 
 
 def gazetteer_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,11 +137,13 @@ def taxonomy(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """Leveled taxonomy dictionary (sciname, sortorder, name_type) —
     the U1 union of species / species_abbr / genus / family projections
     with UNION-dedup and ORDER BY sciname, sortorder."""
-    rows = []
-    for i, (g, s) in enumerate(zip(_GENERA, _SPECIES)):
-        fam = _FAMILIES[i % len(_FAMILIES)]
-        rows.append((g, s, fam))
-    base = spark.createDataFrame(rows, ["genus", "species", "family"])
+    base = spark.createDataFrame(
+        pa.table({
+            "genus": _GENERA,
+            "species": _SPECIES,
+            "family": [_FAMILIES[i % len(_FAMILIES)] for i in range(len(_GENERA))],
+        })
+    )
     levels = (
         base.select(
             F.concat_ws(" ", "genus", "species").alias("sciname"),

@@ -13,10 +13,18 @@ environment:
   similarity between the trigram set of s1 and any continuous extent of
   s2's ordered trigram array, similarity = |∩| / |∪|.
 
+The indel kernel is bit-parallel: indel = len(a) + len(b) − 2·LCS(a, b),
+and the LCS length comes from the Allison–Dix / Hyyrö recurrence over a
+Python int holding one bit per character of the pattern — one big-int
+step per character of the other string instead of an O(len·len) DP
+(the rapidfuzz Indel kernel).  A ``Pattern`` holds a string's match-mask
+table so batch scoring builds it once per dictionary name, not per pair.
+The classic DP survives only in the tests, as the differential reference.
+
 All functions are plain CPython designed to be called *inside* Arrow
-batches (pandas UDFs) — the per-pair DP never crosses the JVM boundary.
-An upper-bound prune (``ratio_upper_bound``) lets cross-join scoring skip
-pairs that cannot reach the accept threshold.
+batches (pandas UDFs) — the per-pair kernel never crosses the JVM
+boundary.  An upper-bound prune (``ratio_upper_bound``) lets cross-join
+scoring skip pairs that cannot reach the accept threshold.
 """
 
 from __future__ import annotations
@@ -27,37 +35,59 @@ from functools import lru_cache
 _NON_WORD = re.compile(r"\W+")
 
 
-@lru_cache(maxsize=1 << 18)
+class Pattern:
+    """A string's match-mask table: bit i of ``masks[c]`` is set where
+    ``text[i] == c``.  Built once, scored against many strings."""
+
+    __slots__ = ("text", "masks", "full")
+
+    def __init__(self, text: str) -> None:
+        masks: dict[str, int] = {}
+        bit = 1
+        for c in text:
+            masks[c] = masks.get(c, 0) | bit
+            bit <<= 1
+        self.text = text
+        self.masks = masks
+        self.full = bit - 1
+
+    def lcs(self, b: str) -> int:
+        """Length of the longest common subsequence of the pattern and
+        ``b``: a zero bit in ``v`` marks a pattern position that extends
+        the LCS, one ``(v + u) | (v − u)`` step per character of ``b``."""
+        full = self.full
+        get = self.masks.get
+        v = full
+        for c in b:
+            u = v & get(c, 0)
+            if u:
+                v = ((v + u) | (v - u)) & full
+        return len(self.text) - v.bit_count()
+
+    def ratio(self, b: str) -> int:
+        """fuzz.ratio of the pattern against ``b``:
+        round(100 · (lensum − indel) / lensum) = round(200 · LCS / lensum)."""
+        lensum = len(self.text) + len(b)
+        if lensum == 0:
+            return 100
+        return round(200 * self.lcs(b) / lensum)
+
+
 def indel_distance(a: str, b: str) -> int:
     """Levenshtein distance with substitution cost 2 (= insertions +
-    deletions only); classic two-row DP, O(len(a)*len(b)).  Cached: block
-    texts and dictionary names repeat heavily within a batch."""
+    deletions only) = len(a) + len(b) − 2·LCS(a, b)."""
     if a == b:
         return 0
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return la + lb
-    if la < lb:  # iterate over the shorter row
-        a, b, la, lb = b, a, lb, la
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        ca = a[i - 1]
-        cur = [i] + [0] * lb
-        for j in range(1, lb + 1):
-            if ca == b[j - 1]:
-                cur[j] = prev[j - 1]
-            else:
-                cur[j] = 1 + min(prev[j], cur[j - 1])
-        prev = cur
-    return prev[lb]
+    if len(a) > len(b):  # the shorter string is the bit pattern
+        a, b = b, a
+    return len(a) + len(b) - 2 * Pattern(a).lcs(b)
 
 
 def ratio(a: str, b: str) -> int:
     """fuzz.ratio: 0-100 int."""
-    lensum = len(a) + len(b)
-    if lensum == 0:
-        return 100
-    return round(100 * (lensum - indel_distance(a, b)) / lensum)
+    if len(a) > len(b):
+        a, b = b, a
+    return Pattern(a).ratio(b)
 
 
 def ratio_upper_bound(len_a: int, len_b: int) -> float:
@@ -77,9 +107,10 @@ def partial_ratio(a: str, b: str) -> int:
         return 100 if len(b) == 0 else 0
     if len(a) == len(b):
         return ratio(a, b)
+    pat = Pattern(a)
     best = 0
     for i in range(len(b) - len(a) + 1):
-        r = ratio(a, b[i : i + len(a)])
+        r = pat.ratio(b[i : i + len(a)])
         if r > best:
             best = r
             if best == 100:

@@ -163,7 +163,7 @@ def ento_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
       4: '<County> Co., <InitcapNation> <tail>'
     The county/nation part hits the synthetic GADM county gazetteer at
     sorted-token ratio ≥ 80 (then best-substring 100), from which
-    ``expand_locality`` derives district_county / state_territory /
+    ``locality_family`` derives district_county / state_territory /
     country / precise_locality — the locality family of the reference
     golden schema (database/transcription_ento.sql:6-10).  Plus block 6,
     the catalog number (block 5 is the taxonomy block in

@@ -9,7 +9,11 @@ a Spark broadcast variable into an Arrow-batched ``mapInPandas`` and
 compute the per-block argmax *inside the batch*: no row explosion, no
 shuffle, and the candidate n-grams (C9) never leave the batch either.
 A length-bound prune (ratio_upper_bound) skips pairs that cannot reach the
-accept threshold.
+accept threshold, and each dictionary name's match-mask table
+(``fuzzy.Pattern``) is built once per task.  ``interpret_all`` runs each
+of its five kernels (dates, localities, taxonomy, collector, fallback)
+exactly once per call: the locality family is derived in the same pass as
+the matched rows, and the stage outputs' two readers share one shuffle.
 
 Determinism pins (the reference iterates DB rows in unspecified order; we
 pin explicit orders and document them):
@@ -40,9 +44,9 @@ from ..schemas import FIELD
 from .dates import alpha_of, interpret_block
 from .dims import COLLECTOR_STRINGS
 from .fuzzy import (
+    Pattern,
     _sorted_tokens,
     _trigram_list,
-    ratio,
     ratio_upper_bound,
     token_sort_ratio,
     word_similarity_pre,
@@ -72,7 +76,7 @@ def _emit(rows: list[tuple]) -> pd.DataFrame:
 def interpret_dates(
     blocks: DataFrame, collector_strings: tuple[str, ...] = COLLECTOR_STRINGS
 ) -> DataFrame:
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dates_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[tuple] = []
             for url, block, wl, text in zip(
@@ -86,7 +90,7 @@ def interpret_dates(
                     )
             yield _emit(rows)
 
-    return blocks.mapInPandas(run, schema=FIELD_WL)
+    return blocks.mapInPandas(dates_kernel, schema=FIELD_WL)
 
 
 # ---------------------------------------------------------------------------
@@ -100,10 +104,11 @@ def match_localities(
     dims = [(r["name"], r["name_type"], r["uid"]) for r in gazetteer.collect()]
     bc = spark.sparkContext.broadcast(dims)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # precompute token-sorted forms of dictionary names once per task
+    def localities_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # token-sorted form and match-mask table of each dictionary name,
+        # built once per task
         names = [
-            (name, _sorted_tokens(name), name_type, uid)
+            (name, Pattern(_sorted_tokens(name)), name_type, uid)
             for name, name_type, uid in bc.value
         ]
         for pdf in it:
@@ -114,30 +119,30 @@ def match_localities(
                 bt = _sorted_tokens(text)
                 lbt = len(bt)
                 best_score, best = -1, None
-                for name, ns, name_type, uid in names:
+                for name, pat, name_type, uid in names:
                     # prune: can't strictly beat current best nor reach the
                     # accept threshold → skip (argmax over ≥threshold
                     # candidates is exact; sub-threshold never emits)
-                    ub = ratio_upper_bound(lbt, len(ns))
+                    ub = ratio_upper_bound(lbt, len(pat.text))
                     if ub <= best_score or ub < SIM_THRESHOLD:
                         continue
-                    s = ratio(bt, ns)
+                    s = pat.ratio(bt)
                     if s > best_score:  # stable: first occurrence wins ties
                         best_score, best = s, (name, name_type, uid)
                 if best is None or best_score < SIM_THRESHOLD:
                     continue
                 name, name_type, _ = best
                 # best-substring re-match (C9, block_identification.py:254-262)
-                ns_best = _sorted_tokens(name)
+                ns_best = Pattern(_sorted_tokens(name))
                 words = text.split(" ")
                 sub_best, sub_text = -1, text
                 for i in range(len(words)):
                     for j in range(i + 1, len(words) + 1):
                         cand = " ".join(words[i:j])
                         cs = _sorted_tokens(cand)
-                        if ratio_upper_bound(len(ns_best), len(cs)) <= sub_best:
+                        if ratio_upper_bound(len(ns_best.text), len(cs)) <= sub_best:
                             continue
-                        s = ratio(ns_best, cs)
+                        s = ns_best.ratio(cs)
                         if s > sub_best:  # stable: generation order on ties
                             sub_best, sub_text = s, cand
                 rows.append(
@@ -146,16 +151,16 @@ def match_localities(
                 )
             yield _emit(rows)
 
-    return blocks.mapInPandas(run, schema=FIELD_WL)
+    return blocks.mapInPandas(localities_kernel, schema=FIELD_WL)
 
 
-def expand_locality(
+def locality_family(
     loc_fields: DataFrame, blocks: DataFrame, hierarchy: DataFrame
 ) -> DataFrame:
-    """Derive the golden schema's locality family from a matched gazetteer
-    entry (database/transcription_ento.sql:6-10; the reference's geo
-    passes carry the matched row's name_1/name_0 hierarchy,
-    auto_id_compare.py:500-510, 637, 720):
+    """``loc_fields`` plus the golden schema's locality family derived from
+    each matched gazetteer entry (database/transcription_ento.sql:6-10;
+    the reference's geo passes carry the matched row's name_1/name_0
+    hierarchy, auto_id_compare.py:500-510, 637, 720):
 
     - ``district_county`` / ``state_territory`` / ``country``: the admin
       hierarchy of the matched (name, name_type) — broadcast join against
@@ -164,11 +169,17 @@ def expand_locality(
       substring removed (literal replace + trim) — the un-gazetteered
       remainder, emitted only when non-empty.
 
-    Input is the deduped ``verbatim_locality`` FIELD rows; output is new
-    FIELD rows (one per derived non-null value), unique per
-    (url, block_id, data_type) by construction."""
-    loc = loc_fields.filter(F.col("data_type") == "verbatim_locality")
-    j = loc.join(
+    Derived rows come only from ``verbatim_locality`` rows with a
+    hierarchy entry; every input row passes through unchanged.  Each input
+    row becomes an array of itself and its derived rows, exploded in one
+    projection, so ``loc_fields`` (a Python kernel's output) is read once.
+    A union of the input with its expansion would read it twice, and the
+    expansion's pushed-down filter and pruned columns would keep Spark
+    from reusing the kernel's shuffle.  Output is unique per
+    (url, block_id, data_type) when the input is and ``blocks`` has one
+    row per (url, block)."""
+    hit = F.col("_h_name").isNotNull()
+    j = loc_fields.join(
         F.broadcast(
             hierarchy.select(
                 F.col("name").alias("_h_name"),
@@ -178,53 +189,65 @@ def expand_locality(
                 F.col("country").alias("_h_country"),
             )
         ),
-        (F.col("interpreted_value") == F.col("_h_name"))
+        (F.col("data_type") == "verbatim_locality")
+        & (F.col("interpreted_value") == F.col("_h_name"))
         & (F.col("data_format") == F.col("_h_type")),
-        "inner",
+        "left",
     ).join(
         blocks.select(
             "url", F.col("block").alias("block_id"), "block_text"
         ),
         ["url", "block_id"],
+        "left",
     )
     remainder = F.trim(
         F.replace(F.col("block_text"), F.col("verbatim_value"), F.lit(""))
     )
-    e = F.explode(
+
+    def row(dt, fmt, iv, vv, src, score):  # noqa: ANN001, ANN202
+        return F.struct(
+            dt.alias("data_type"), fmt.alias("data_format"),
+            iv.alias("interpreted_value"), vv.alias("verbatim_value"),
+            src.alias("data_source"), score.alias("match_score"),
+        )
+
+    def derived(dt, iv, fmt=None, vv=None):  # noqa: ANN001, ANN202
+        return row(
+            F.lit(dt), F.col("data_format") if fmt is None else fmt, iv,
+            F.col("verbatim_value") if vv is None else vv,
+            F.lit("gazetteer"), F.lit(0.0),
+        )
+
+    family = F.filter(
         F.array(
-            F.struct(
-                F.lit("district_county").alias("dt"),
-                F.col("_h_county").alias("iv"),
-            ),
-            F.struct(F.lit("state_territory").alias("dt"),
-                     F.col("_h_state").alias("iv")),
-            F.struct(F.lit("country").alias("dt"),
-                     F.col("_h_country").alias("iv")),
-            F.struct(F.lit("precise_locality").alias("dt"),
-                     remainder.alias("iv")),
-        )
+            derived("district_county", F.col("_h_county")),
+            derived("state_territory", F.col("_h_state")),
+            derived("country", F.col("_h_country")),
+            derived("precise_locality", remainder,
+                    F.lit("locality:precise"), remainder),
+        ),
+        lambda e: e["interpreted_value"].isNotNull()
+        & (e["interpreted_value"] != ""),
     )
-    return (
-        j.select(
-            "url", "block_id", e.alias("e"),
-            "data_format", "verbatim_value",
-        )
-        .filter(F.col("e.iv").isNotNull() & (F.col("e.iv") != ""))
-        .select(
-            "url",
-            "block_id",
-            F.col("e.dt").alias("data_type"),
-            F.when(
-                F.col("e.dt") == "precise_locality",
-                F.lit("locality:precise"),
-            ).otherwise(F.col("data_format")).alias("data_format"),
-            F.col("e.iv").alias("interpreted_value"),
-            F.when(
-                F.col("e.dt") == "precise_locality", F.col("e.iv")
-            ).otherwise(F.col("verbatim_value")).alias("verbatim_value"),
-            F.lit("gazetteer").alias("data_source"),
-            F.lit(0.0).alias("match_score"),
-        )
+    own = row(
+        F.col("data_type"), F.col("data_format"), F.col("interpreted_value"),
+        F.col("verbatim_value"), F.col("data_source"), F.col("match_score"),
+    )
+    rows = F.when(hit, F.concat(F.array(own), family)).otherwise(F.array(own))
+    return j.select("url", "block_id", F.explode(rows).alias("e")).select(
+        "url", "block_id", "e.*"
+    )
+
+
+def expand_locality(
+    loc_fields: DataFrame, blocks: DataFrame, hierarchy: DataFrame
+) -> DataFrame:
+    """The derived rows of ``locality_family`` alone: new FIELD rows (one
+    per derived non-null value) for the ``verbatim_locality`` rows of
+    ``loc_fields``."""
+    loc = loc_fields.filter(F.col("data_type") == "verbatim_locality")
+    return locality_family(loc, blocks, hierarchy).filter(
+        F.col("data_type") != "verbatim_locality"
     )
 
 
@@ -242,9 +265,9 @@ def match_taxonomy(
     ]
     bc = spark.sparkContext.broadcast(dims)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def taxonomy_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         names = [
-            (sciname, _sorted_tokens(sciname), sortorder, name_type)
+            (sciname, Pattern(_sorted_tokens(sciname)), sortorder, name_type)
             for sciname, sortorder, name_type in bc.value
         ]
         for pdf in it:
@@ -258,17 +281,17 @@ def match_taxonomy(
                 # — pandas sort_values(['score','sortorder'], ascending=False)
                 # over a frame ordered by (sciname, sortorder)  (:293-295)
                 best_key, best = None, None
-                for idx, (sciname, ns, sortorder, name_type) in enumerate(names):
+                for idx, (sciname, pat, sortorder, name_type) in enumerate(names):
                     # NB no strict prune here: the tie-break on sortorder
                     # means an equal score can still displace the best, so
                     # only skip when the bound is strictly below both the
                     # current best score and the threshold
-                    ub = ratio_upper_bound(lbt, len(ns))
+                    ub = ratio_upper_bound(lbt, len(pat.text))
                     if best_key is not None and (
                         ub < best_key[0] or ub < SIM_THRESHOLD
                     ):
                         continue
-                    s = ratio(bt, ns)
+                    s = pat.ratio(bt)
                     key = (s, sortorder, -idx)
                     if best_key is None or key > best_key:
                         best_key, best = key, (sciname, name_type)
@@ -281,7 +304,7 @@ def match_taxonomy(
                 )
             yield _emit(rows)
 
-    return blocks.mapInPandas(run, schema=FIELD_WL)
+    return blocks.mapInPandas(taxonomy_kernel, schema=FIELD_WL)
 
 
 # catalog-number pattern; whitespace spelled explicitly (Java ∩ RE2 rule:
@@ -320,18 +343,21 @@ def match_collector(
     fields_so_far: DataFrame,
     collector_strings: tuple[str, ...] = COLLECTOR_STRINGS,
 ) -> DataFrame:
-    others = (
-        fields_so_far.filter(F.col("data_type") != "collector")
-        .groupBy(F.col("url"), F.col("block_id").alias("block"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("data_type", "verbatim_value"))
-            ).alias("other_vals")
-        )
-    )
+    # every column of the block's field rows, not just the two the kernel
+    # reads: a pruned read of ``fields_so_far`` would differ from the
+    # merge's read of it, and the stage kernels' shuffles below both would
+    # then run twice instead of being reused.  Sorted by (data_type,
+    # verbatim_value), the leading struct fields.
+    values = ["data_type", "verbatim_value"] + [
+        c for c in fields_so_far.columns
+        if c not in ("url", "block_id", "data_type", "verbatim_value")
+    ]
+    others = fields_so_far.groupBy(
+        F.col("url"), F.col("block_id").alias("block")
+    ).agg(F.array_sort(F.collect_list(F.struct(*values))).alias("other_vals"))
     joined = blocks.join(others, ["url", "block"], "left")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def collector_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[tuple] = []
             for url, block, wl, text, other in zip(
@@ -345,7 +371,7 @@ def match_collector(
                     if other is not None and len(other) > 0:
                         for item in other:  # data_type ASC (pinned order)
                             vv = item["verbatim_value"]
-                            if vv:
+                            if vv and item["data_type"] != "collector":
                                 interpreted = interpreted.replace(vv, "").strip()
                     interpreted = interpreted.replace(coll, "").strip()
                     # quirk :319-321 — skip when the remainder equals any
@@ -361,7 +387,7 @@ def match_collector(
                         break
             yield _emit(rows)
 
-    return joined.mapInPandas(run, schema=FIELD_WL)
+    return joined.mapInPandas(collector_kernel, schema=FIELD_WL)
 
 
 # ---------------------------------------------------------------------------
@@ -423,7 +449,7 @@ def similarity_fallback(
     ).agg(F.collect_set("data_type").alias("present_types"))
     joined = blocks.join(present, ["url", "block"], "left")
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fallback_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         snap_raw, types = bc.value
         # precompute trigram sets of the snapshot once per task
         snap = [
@@ -461,7 +487,7 @@ def similarity_fallback(
                     )
             yield _emit(rows)
 
-    return joined.mapInPandas(run, schema=FIELD_WL)
+    return joined.mapInPandas(fallback_kernel, schema=FIELD_WL)
 
 
 # ---------------------------------------------------------------------------
@@ -516,12 +542,19 @@ def interpret_all(
 ) -> DataFrame:
     """Full §3.2 pipeline: dates → localities (→ admin-hierarchy
     expansion when a hierarchy dim is given) → taxonomy → collector →
-    similarity fallback, merged with reference upsert semantics."""
-    blocks = blocks.cache()
+    similarity fallback, merged with reference upsert semantics.
+
+    Each Python kernel runs once per call.  The dates, localities and
+    taxonomy outputs are read twice (by the collector and by the merge),
+    through identical shuffles that adaptive execution reuses; only the
+    pre-fallback merge, which the fallback reads four times, is cached.
+    ``blocks`` is deliberately not cached here: each scan of a cached
+    relation becomes its own query stage, and the shuffles above two such
+    stages no longer match, so every kernel above them would run again."""
     dates = dedup_line_grain(interpret_dates(blocks, collector_strings))
     locs = dedup_line_grain(match_localities(spark, blocks, gazetteer))
     if hierarchy is not None:
-        locs = locs.unionByName(expand_locality(locs, blocks, hierarchy))
+        locs = locality_family(locs, blocks, hierarchy)
     taxo = dedup_line_grain(match_taxonomy(spark, blocks, taxonomy))
     base = merge_fields(merge_fields(dates, locs), taxo)
     coll = dedup_line_grain(match_collector(blocks, base, collector_strings))

@@ -52,3 +52,12 @@ def test_fast_is_faster():
         segment_html_fast(p)
     t_fast = time.time() - t0
     assert t_fast < t_ref, (t_fast, t_ref)
+
+
+def test_comment_opener_inside_script_string():
+    """A ``<!--`` inside a script string must not open a comment that
+    swallows the markup after ``</script>``: the lexer resumes after the
+    rawtext end tag instead of trusting a match that straddles it."""
+    p = b'<script>a="<!--"</script><p>one</p><p>two --> three</p>'
+    assert segment_html(p) == ["one", "two --> three"]
+    assert segment_html_fast(p) == segment_html(p)

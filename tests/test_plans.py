@@ -7,6 +7,8 @@ column pruning, or broadcast-dim selection — the plan properties the
 
 from __future__ import annotations
 
+import os
+
 SD = "/root/testdata/sf0.001"
 
 
@@ -168,3 +170,64 @@ def test_bloom_verify_join_is_broadcast(spark):
     assert "MapInPandas" in plan, plan  # the vectorized bloom probe
     # the hits aggregation + final doc join: bounded Exchange count
     assert plan.count("Exchange hashpartitioning") <= 4, plan
+
+
+def _python_evaluations(spark, df) -> list[str]:
+    """Name of every Python-evaluation node the last action on ``df``
+    executed, each executed subtree counted once: a reused shuffle stands
+    in for its subtree, and a cached relation's plan is walked once."""
+    seen_caches = set()
+    names: list[str] = []
+
+    def walk(node) -> None:  # noqa: ANN001 — py4j SparkPlan
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "ReusedExchangeExec":
+            return None
+        if cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = spark._jvm.System.identityHashCode(builder)
+            if key not in seen_caches:
+                seen_caches.add(key)
+                walk(node.relation().cachedPlan())
+            return None
+        if "Pandas" in node.nodeName() or "Python" in node.nodeName():
+            # "MapInPandas <udf name>(<args>)..." → the UDF's name
+            names.append(node.simpleString(100).split()[1].split("(")[0])
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+        return None
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return names
+
+
+def test_interpret_all_runs_each_kernel_once(spark):
+    """Materialising interpret_all evaluates each of its five Python
+    kernels exactly once: the collector's and the merge's reads of the
+    stage outputs share their shuffles, and the locality family is derived
+    in the same pass as the matched rows it extends."""
+    from dpo_ocr_spark.interpret.dims import (
+        gazetteer,
+        gazetteer_hierarchy,
+        taxonomy,
+    )
+    from dpo_ocr_spark.interpret.labels import label_blocks_with_dims
+    from dpo_ocr_spark.interpret.match import interpret_all
+
+    sd = os.path.join(os.path.dirname(SD), "sf0.01")
+    df = interpret_all(
+        spark, label_blocks_with_dims(spark, sd), gazetteer(spark, sd),
+        taxonomy(spark), hierarchy=gazetteer_hierarchy(spark, sd),
+    )
+    df.collect()
+    kernels = _python_evaluations(spark, df)
+    assert len(kernels) == 5, kernels
+    assert sorted(kernels) == sorted([
+        "dates_kernel", "localities_kernel", "taxonomy_kernel",
+        "collector_kernel", "fallback_kernel",
+    ]), kernels
